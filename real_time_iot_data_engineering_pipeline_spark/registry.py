@@ -66,86 +66,12 @@ _QUERY_MODULES = (
 # order; every query that falls outside the window as a result already
 # holds a green driver row (CORRECTNESS_r01 and/or _r02).
 _DRIVER_PRIORITY = (
-    # round-13 rotation (optimization round 2): CORRECTNESS_r12 converted
-    # all 50 round-12 slots to green rows.  This round's optimizations
-    # touched 35 queries whose executed code changed (results proven
-    # identical against the DuckDB oracle at sf0.001+sf0.01 in-session,
-    # but the driver's hard-signal row must re-certify the new code —
-    # all 35 are in tests' _RECERTIFY, exempt from the oldest-first
-    # invariant).  The remaining 15 slots take the alphabetically-first
-    # of the staleness tail: 34 queries last certified round 6 (age 7 —
-    # past the 6-round cadence bar, so window or overflow is mandatory);
-    # the other 19 r6 plus the 30 round-7-certified (age 6 — mandatory
-    # NEXT round) queue in _NEXT_ROUND_PRIORITY.
-    # -- code changed in round 13 (see OPTIMIZATION_r13.md):
-    # minhash est_jaccard unrolled to codegen (text.py) + CC small-graph
-    # fast path (functions/components.py):
-    "q_doc_dedup_minhash",
-    "q_doc_dup_groups",
-    "q_doc_dup_groups_cc",
-    "q_dup_group_stats",
-    "q_cc_incremental",
-    "q_minhash_eval",
-    "q_dedup_incremental",
-    # q_ngram_novelty reverted to the anti-join form; q_jaccard_setjoin
-    # dropped the r12 pref checkpoint; LP gained the small-graph path:
-    "q_ngram_novelty",
-    "q_jaccard_setjoin",
-    "q_label_propagation_converged",
-    # embedding family: dot/norm/distance lambdas unrolled to codegen
-    # (similarity.py, curation.py, embedding_ops.py):
-    "q_semdedup",
-    "q_embed_binary_eval",
-    "q_embed_truncation_eval",
-    "q_pq_codes",
-    "q_cluster_purity",
-    "q_embed_anisotropy",
-    "q_embed_outliers",
-    "q_embed_knn",
-    "q_embed_knn_lsh",
-    "q_embed_near_dup",
-    "q_embed_ivf",
-    "q_embed_centroids",
-    "q_semantic_decontaminate",
-    "q_hard_negatives",
-    "q_embed_dedup_incremental",
-    "q_pq_adc_knn",
-    "q_ivf_adc_knn",
-    "q_ivfadc_residual_knn",
-    "q_knn_classify",
-    "q_ann_recall",
-    "q_semantic_dedup",
-    "q_embed_centroid_drift",
-    "q_kmeans_step",
-    "q_silhouette",
-    "q_power_iteration",
-    # -- last driver-certified round 6 (alphabetically-first 15 of the 34
-    # not already re-fronted above):
-    "q_doc_containment",
-    "q_doc_length_bands",
-    "q_eval_grams",
-    "q_hill_tail",
-    "q_hll_distinct",
-    "q_integrity_audit",
-    "q_join_cardinality",
-    "q_label_balance",
-    "q_lang_confusion",
-    "q_link_prediction",
-    "q_market_concentration",
-    "q_minhash_band_tuning",
-    "q_misra_gries",
-    "q_mix_shift",
-    "q_order_reorder_rate",
-)
-
-# Rotation OVERFLOW queue: stale-certified queries that did not fit in this
-# round's 50-slot window.  They order immediately after the window
-# (positions 51+) and are the mandatory front of next round's rotation —
-# the cadence guard (tests/test_oracle_parity.py) treats window+overflow as
-# "scheduled for re-cert" when enforcing the <=6-round freshness bar.
-_NEXT_ROUND_PRIORITY: tuple[str, ...] = (
-    # -- last driver-certified round 6 (remaining 19 of the 34 after the
-    # window's 15): the mandatory front of the round-14 rotation.
+    # round-14 rotation: CORRECTNESS_r13 certified all 50 round-13 slots
+    # green (the 35 re-fronted after round-13 code changes included), so
+    # the window goes oldest-cert-first: every query last certified in
+    # round 6 (age 8) or round 7 (age 7), both past the 6-round cadence
+    # bar, then the alphabetically-first round-8 query.
+    # -- last driver-certified round 6:
     "q_pack_efficiency",
     "q_partition_plan",
     "q_price_elasticity",
@@ -165,8 +91,7 @@ _NEXT_ROUND_PRIORITY: tuple[str, ...] = (
     "q_vocab_coverage",
     "q_weekday_anova",
     "q_welford_stats",
-    # -- last driver-certified round 7 (age 6 at the r13 build — hits the
-    # cadence bar at r14, so they queue here already):
+    # -- last driver-certified round 7:
     "q_abc_classes",
     "q_boilerplate",
     "q_c4_filters",
@@ -197,6 +122,56 @@ _NEXT_ROUND_PRIORITY: tuple[str, ...] = (
     "q_url_dedup",
     "q_value_deciles",
     "q_volume_anomaly",
+    # -- last driver-certified round 8 (first of 39):
+    "q_batch_novelty",
+)
+
+# Rotation OVERFLOW queue: stale-certified queries that did not fit in this
+# round's 50-slot window.  They order immediately after the window
+# (positions 51+) and are the mandatory front of next round's rotation —
+# the cadence guard (tests/test_oracle_parity.py) treats window+overflow as
+# "scheduled for re-cert" when enforcing the <=6-round freshness bar.
+_NEXT_ROUND_PRIORITY: tuple[str, ...] = (
+    # -- last driver-certified round 8 (the other 38; age 6 at the r14
+    # build, so they hit the cadence bar at r15 and queue here already):
+    "q_bloom_join",
+    "q_case_status",
+    "q_cast",
+    "q_city_avg_compare",
+    "q_daily_agg",
+    "q_dedup_exact",
+    "q_dedup_exact_incremental",
+    "q_filter_completeness",
+    "q_filter_freshness",
+    "q_filter_notnull",
+    "q_filter_range",
+    "q_filter_regex",
+    "q_hash_partition",
+    "q_hourly_agg",
+    "q_join_anti",
+    "q_join_broadcast",
+    "q_join_inner",
+    "q_join_salted",
+    "q_location_agg",
+    "q_null_policy",
+    "q_outlier_flag",
+    "q_project_rename",
+    "q_quality_counts",
+    "q_quality_ensemble",
+    "q_quality_ratios",
+    "q_rank_per_group",
+    "q_rolling_7d",
+    "q_salted_agg",
+    "q_sort_limit",
+    "q_source_scan",
+    "q_sudden_change",
+    "q_time_features",
+    "q_to_timestamp",
+    "q_token_budget_pack",
+    "q_topk_per_group",
+    "q_tumbling_agg",
+    "q_validate_iot",
+    "q_zscore_flag",
 )
 
 

@@ -14,6 +14,17 @@ algebra: union(current, batch) -> row_number over key ordered by epoch desc
 Streaming's failure contract) reproduces the identical table, which is what
 makes checkpoint + foreachBatch exactly-once end-to-end.
 
+Materialize-once contract: the frame foreachBatch hands over is an
+un-cached plan ending in the stream's stateful operators (dedup state,
+window aggregate), and every action on it re-runs them — a RocksDB load
+and commit per task, and doubled operator metrics in the progress event.
+upsert therefore runs that plan exactly once, into a local checkpoint
+(``persist()`` fails on the foreachBatch frame in Spark 4.1), serves the
+emptiness check and the merge from the copy, and frees its blocks before
+returning, also when the merge raises.  Every version carries its exact
+write-time schema (``_sinkschema.json``), so reads and merges start
+without a schema-inference job.
+
 Scale posture: with ``partition_col`` set (one of the key columns, e.g. the
 window date), the merge is PARTITION-PRUNED like a Delta/Iceberg MERGE:
 only partitions containing changed keys are re-merged and rewritten; every
@@ -41,6 +52,19 @@ from pyspark.sql import types as T
 
 _EPOCH_COL = "_epoch"
 _SCHEMA_FILE = "_sinkschema.json"
+
+
+def _write_schema(version_dir: str, schema: T.StructType) -> None:
+    with open(os.path.join(version_dir, _SCHEMA_FILE), "w") as f:
+        json.dump(schema.jsonValue(), f)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a localCheckpoint()ed frame.  unpersist() on the
+    frame does not reach them: they belong to the RDD under its LogicalRDD
+    leaf, which otherwise stays registered until a JVM GC lets the context
+    cleaner find it."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 class KeyedParquetSink:
@@ -107,11 +131,13 @@ class KeyedParquetSink:
         return self._current() is not None
 
     def _read_version(self, path: str) -> DataFrame:
-        """Read one version dir.  Partitioned versions ship their exact
-        write-time schema (_sinkschema.json): without it, partition-value
-        type inference would silently retype the partition column on
-        read-back (e.g. a string '2024-01-01' comes back as DATE), breaking
-        both the read() contract and the merge union."""
+        """Read one version dir with its exact write-time schema
+        (_sinkschema.json).  Without it a read pays a schema-inference job,
+        and on a partitioned version partition-value inference would
+        silently retype the partition column (e.g. a string '2024-01-01'
+        comes back as DATE), breaking both the read() contract and the merge
+        union.  Versions written before every version carried the file
+        (unpartitioned ones) still read through inference."""
         schema_file = os.path.join(path, _SCHEMA_FILE)
         if os.path.exists(schema_file):
             with open(schema_file) as f:
@@ -130,15 +156,24 @@ class KeyedParquetSink:
         """foreachBatch body: merge `batch_df` into the table, keyed
         last-write-wins (higher epoch wins; replay of the same epoch is a
         no-op by value).  Mirrors streaming_job.py:586-603 including the
-        empty-batch fast path (modern df.isEmpty() instead of the
-        reference's df.rdd.isEmpty()).
+        empty-batch fast path.
+
+        `batch_df` is executed exactly once (module docstring): it is
+        materialized with localCheckpoint(), the emptiness check and the
+        merge read that copy, and its blocks are released on every exit.
 
         Commit protocol: write the merged table to a fresh version dir,
         fsync a temp pointer, os.replace it over CURRENT (atomic on POSIX),
         then garbage-collect older versions.  Readers and crashed writers
         can never observe a partial table."""
-        if batch_df.isEmpty():
-            return
+        batch = batch_df.localCheckpoint()
+        try:
+            if not batch.isEmpty():
+                self._merge(batch, epoch_id)
+        finally:
+            _release_checkpoint(batch)
+
+    def _merge(self, batch_df: DataFrame, epoch_id: int) -> None:
         incoming = batch_df.withColumn(_EPOCH_COL, F.lit(int(epoch_id)))
         current = self._current()
         prev_version = os.path.basename(current) if current is not None else None
@@ -171,10 +206,9 @@ class KeyedParquetSink:
             deduped.write.mode("overwrite").partitionBy(pcol).parquet(out)
             if current is not None:
                 self._carry_untouched_partitions(current, out)
-            with open(os.path.join(out, _SCHEMA_FILE), "w") as f:
-                json.dump(deduped.schema.jsonValue(), f)
         else:
             deduped.write.mode("overwrite").parquet(out)
+        _write_schema(out, deduped.schema)
         self._commit(version, prev_version)
 
     def _commit(self, version: str, prev_version: str | None) -> None:
@@ -256,6 +290,7 @@ class KeyedParquetSink:
                 return {"compacted": 0, "skipped": 1}
             df = self._read_version(current)
             df.coalesce(max_files_per_partition).write.mode("overwrite").parquet(out)
+            _write_schema(out, df.schema)
             self._commit(version, prev_version)
             return {"compacted": 1, "skipped": 0}
 

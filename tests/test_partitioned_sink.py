@@ -339,3 +339,57 @@ def test_foreach_batch_periodic_compaction(spark, tmp_path, fragmented_writes):
     assert _nfiles(sink, "2024-01-01") == 1
     rows = {r["k"]: r["v"] for r in sink.read().collect()}
     assert rows == {k: 2.0 for k in range(20)}
+
+
+def test_upsert_releases_its_materialized_batch(spark, tmp_path, monkeypatch):
+    """upsert materializes each batch once (localCheckpoint) and must free
+    that copy on every exit: the persistent-RDD registry does not grow with
+    the number of upserts, nor when the merge raises (the retry path)."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    sink = KeyedParquetSink(spark, str(tmp_path / "t"), ["day", "k"])
+    for epoch in range(3):
+        sink.upsert(_rows(spark, [("2024-01-01", epoch, 1.0)]), epoch)
+    sink.upsert(_rows(spark, []), 3)  # empty batch: the fast path
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+
+    def failing_commit(self, version, prev_version):
+        raise OSError("pointer swap failed")
+
+    monkeypatch.setattr(KeyedParquetSink, "_commit", failing_commit)
+    with pytest.raises(OSError, match="pointer swap failed"):
+        sink.upsert(_rows(spark, [("2024-01-01", 9, 9.0)]), 4)
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+    monkeypatch.undo()
+    assert sorted((r.day, r.k) for r in sink.read().collect()) == [
+        ("2024-01-01", 0),
+        ("2024-01-01", 1),
+        ("2024-01-01", 2),
+    ]
+
+
+def test_version_without_schema_file_reads_and_merges(spark, tmp_path):
+    """Unpartitioned versions written before every version carried
+    _sinkschema.json still read back (through schema inference) and merge;
+    the next version written over them carries the file again."""
+    from real_time_iot_data_engineering_pipeline_spark.sinks.keyed_parquet import (
+        _SCHEMA_FILE,
+    )
+
+    sink = KeyedParquetSink(spark, str(tmp_path / "t"), ["day", "k"])
+    sink.upsert(_rows(spark, [("2024-01-01", 1, 1.0), ("2024-01-01", 2, 2.0)]), 0)
+    old = sink._current()
+    os.remove(os.path.join(old, _SCHEMA_FILE))  # the older on-disk layout
+    assert sorted(tuple(r) for r in sink.read().collect()) == [
+        ("2024-01-01", 1, 1.0),
+        ("2024-01-01", 2, 2.0),
+    ]
+    sink.upsert(_rows(spark, [("2024-01-01", 2, 22.0), ("2024-01-02", 3, 3.0)]), 1)
+    assert sink._current() != old
+    assert os.path.exists(os.path.join(sink._current(), _SCHEMA_FILE))
+    assert sink.read().schema == _rows(spark, []).schema
+    assert sorted(tuple(r) for r in sink.read().collect()) == [
+        ("2024-01-01", 1, 1.0),
+        ("2024-01-01", 2, 22.0),
+        ("2024-01-02", 3, 3.0),
+    ]

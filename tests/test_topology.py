@@ -700,3 +700,100 @@ def test_topology_quantiles_branch(spark, tmp_path):
     # p50 of 10..80 = rank ceil(0.5*8)=4 -> the bin holding 40
     assert abs(final.p50 - 40.0) <= final.err_bound
     assert final.p99 <= 80.0 + final.err_bound  # 500 never entered
+
+
+def test_topology_main_batch_runs_once(spark, tmp_path, monkeypatch):
+    """Each main-branch micro-batch executes its stateful plan exactly
+    once.  Every execution of the foreachBatch frame re-runs the window
+    aggregate and adds to its progress metrics, so the aggregate
+    operator's numRowsUpdated equals the rows the epoch upserted only when
+    the sink ran the frame once (a sink that also runs an emptiness check
+    on the raw frame reports twice the rows).  The sink's materialized
+    copies must not outlive their epoch: no persistent RDD is left behind
+    however many epochs ran."""
+    import time
+
+    from pyspark.sql.streaming import listener as L
+
+    from real_time_iot_data_engineering_pipeline_spark.sinks import (
+        KeyedParquetSink,
+    )
+
+    class AggUpdates(L.StreamingQueryListener):
+        def __init__(self):
+            super().__init__()
+            self.by_epoch: dict[int, int] = {}
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.name == "topology-main":
+                [agg] = [
+                    op for op in p.stateOperators
+                    if op.operatorName == "stateStoreSave"
+                ]
+                self.by_epoch[p.batchId] = agg.numRowsUpdated
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    upserted: dict[int, int] = {}
+    upsert = KeyedParquetSink.upsert
+
+    def counting_upsert(self, batch_df, epoch_id):
+        upsert(self, batch_df, epoch_id)
+        # rows stamped with this epoch in the live table, read from the
+        # written files so the count never re-runs the streaming frame
+        current = self._current()
+        upserted[epoch_id] = (
+            0
+            if current is None
+            else self._read_version(current)
+            .filter(f"_epoch = {int(epoch_id)}")
+            .count()
+        )
+
+    monkeypatch.setattr(KeyedParquetSink, "upsert", counting_upsert)
+
+    src = tmp_path / "src"
+    src.mkdir()
+    valid_kwargs = dict(props='{"k": 1}', event_type="click")
+    n_files = 3
+    for seq in range(n_files):
+        write_file(
+            str(src),
+            f"f{seq}.json",
+            [
+                dict(
+                    ev(100 * seq + i, f"2024-01-19 1{seq}:0{i}:00", user_id=i % 3,
+                       value=float(i)),
+                    **valid_kwargs,
+                )
+                for i in range(8)
+            ],
+            seq=seq,
+        )
+
+    sc = spark.sparkContext
+    persistent_before = set(sc._jsc.getPersistentRDDs().keySet())
+    listener = AggUpdates()
+    spark.streams.addListener(listener)
+    try:
+        run_topology(spark, str(src), str(tmp_path / "out"))
+        deadline = time.time() + 30
+        while time.time() < deadline and not set(upserted) <= set(
+            listener.by_epoch
+        ):
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+
+    data_epochs = [e for e in sorted(upserted) if upserted[e] > 0]
+    assert len(data_epochs) == n_files, upserted
+    assert {e: listener.by_epoch.get(e) for e in upserted} == upserted
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= persistent_before
